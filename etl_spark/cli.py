@@ -16,38 +16,27 @@ import json
 import sys
 
 
-_DERIVED_ROOTS = {"rollup": "_rollup", "clean_corpus": "_clean",
-                  "dedup_index": "_dedup"}
-
-
 def _derived_status(spark, fact) -> dict:
     """Sync state of each derived table living under the fact root —
-    the observability face of the replay-start catch-up healer: a non-zero
-    ``missing_epochs`` means a fact commit's derived update crashed (or
-    the maintainer was enabled on a table with history) and the NEXT
-    maintained replay will heal it. Manifest reads only, no Spark jobs."""
+    the observability face of the replay-start healer: ``lag_versions``
+    (fact head minus the table's offset), ``missing_epochs`` (fact epochs
+    applied since the offset) and ``synced`` (none missing and no resync
+    pending, e.g. after a fact rollback). A lagging table is healed by the
+    NEXT maintained replay. Manifest reads only, no Spark jobs."""
     import os
 
-    from etl_spark.derived import _missed_epochs, _synced_to_version
-    from etl_spark.lake.table import SnapshotTable
+    from etl_spark.derived import CleanCorpus, DedupIndex, RepoRollup
 
     out: dict = {}
-    for name, sub in _DERIVED_ROOTS.items():
-        # the dedup index holds TWO tables; its bands table carries the
-        # watermark/epoch state (the first-merged of the pair)
+    for name, sub, cls in (("rollup", "_rollup", RepoRollup),
+                           ("clean_corpus", "_clean", CleanCorpus),
+                           ("dedup_index", "_dedup", DedupIndex)):
         root = f"{fact.root}/{sub}"
-        probe = f"{root}/bands" if name == "dedup_index" else root
-        if not os.path.isdir(probe):
+        if not os.path.isdir(root):
             continue
-        d = SnapshotTable(spark, probe)
-        if not d.exists():
-            continue
-        missing, _ = _missed_epochs(fact, d)
-        out[name] = {
-            "synced": missing is None,
-            "missing_epochs": len(missing or []),
-            "derived_from_version": _synced_to_version(d),
-        }
+        maint = cls(spark, fact, root)
+        if maint.table.exists():
+            out[name] = maint.lag()
     return out
 
 

@@ -3,27 +3,24 @@
 The reference maintains derived keyed tables incrementally from the cleaned
 fact table: construct reads only points newer than the derived watermark and
 recomputes exactly the affected keys (SURVEY §3.3;
-duckdb_construct_trajs_stops.py:45-126). Generalized here as an incrementally
-maintained **per-repo rollup** over the snapshot table:
+duckdb_construct_trajs_stops.py:45-126). Three such tables live here — a
+per-repo rollup, a clean corpus and a near-dup index — each a
+:class:`~etl_spark.consumer.ChangeFeedConsumer` on the one ``sync()``
+contract: offset = the fact version it last derived from
+(``derived_from_version`` in its own manifest); a rebuild via
+``replace_all`` after a fact rollback or offset expiry; otherwise the keys
+in ``changes_between(offset, target)`` are recomputed and merged under the
+fact's newly applied epoch ids, so maintenance inherits the fact's
+exactly-once semantics. Touched keys with no recomputed row (every fact row
+CDC-deleted, or the content fails a gate) are tombstoned in the SAME commit.
 
     repo_rollup(repo, n_files, total_bytes, n_langs, top_lang,
                 last_commit, last_epoch)
 
-Incremental maintenance (P2, recompute avoidance): after an epoch commit,
-only repos present in the commit's new files changed; the maintainer reads
-those files (bucket-pure, small), recomputes rollups for exactly that repo
-set from the snapshot, and upserts them — cost scales with the epoch's
-footprint, not the table. The rollup table is itself a SnapshotTable keyed on
-``repo`` ordered by ``as_of_version`` — the SOURCE SNAPSHOT VERSION the
-rollup was computed at (self-hosted: same atomic-commit / idempotence
-machinery as the fact table), so rollup maintenance inherits exactly-once
-semantics keyed by the same epoch ids. The order must be the source version,
-not the repo's ``last_commit``: a CDC DELETE can make the recomputed
-``max(commit)`` tie with or drop BELOW the stale rollup's, so last_commit is
-not monotonic under deletes and the stale row would win latest-wins.
-
-A full recompute (``refresh_full``) is differential-tested equal to the
-incremental path.
+Every derived table is ordered by ``as_of_version`` — the SOURCE SNAPSHOT
+VERSION the row was computed at, not a source column: a CDC DELETE can make
+the recomputed ``max(commit)`` drop BELOW the stale rollup's, and the stale
+row would win latest-wins.
 """
 
 from __future__ import annotations
@@ -33,7 +30,13 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.lake.table import TOMBSTONE_COL, SnapshotTable
+from etl_spark.consumer import ChangeFeedConsumer, offset_summary
+from etl_spark.lake.table import TOMBSTONE_COL, SnapshotTable, _all_applied_epochs
+from etl_spark.operators.textdedup import (
+    _release_local_checkpoint, minhash_signature_table,
+)
+
+OFFSET_MARKER = "derived_from_version"
 
 
 def rollup_expr(snapshot_rows: DataFrame) -> DataFrame:
@@ -66,117 +69,36 @@ def rollup_expr(snapshot_rows: DataFrame) -> DataFrame:
     return base.join(top_lang, "repo")
 
 
-def _as_epoch_list(epoch_id: int | list[int]) -> list[int]:
-    if isinstance(epoch_id, (list, tuple, set)):
-        return sorted(int(e) for e in epoch_id)
-    return [int(epoch_id)]
+def _live(rows: DataFrame) -> DataFrame:
+    if TOMBSTONE_COL not in rows.columns:
+        return rows
+    return rows.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
 
 
-def _synced_to_version(table: SnapshotTable) -> int | None:
-    """Newest ``derived_from_version`` marker across retained snapshots —
-    informational provenance (the source version the last maintenance round
-    derived from). NOT the catch-up gate: a per-commit update only attests
-    its own epochs, so gap detection runs on epoch sets (see
-    :func:`_missed_epochs`)."""
-    for v in reversed(table.versions()):
-        s = (table.manifest(v) or {}).get("summary") or {}
-        if "derived_from_version" in s:
-            return s["derived_from_version"]
-    return None
+def _with_gone(updates: DataFrame, keys: DataFrame, as_of: int) -> DataFrame:
+    """``updates`` plus a tombstone for each row of ``keys`` (the touched
+    keys' prior rows) they no longer produce, all stamped ``as_of`` — one
+    row per key, for ONE commit."""
+    cols = keys.columns
+    gone = keys.join(updates.select(*cols), cols, "left_anti").withColumn(
+        TOMBSTONE_COL, F.lit(True)
+    )
+    return updates.unionByName(gone, allowMissingColumns=True).withColumn(
+        "as_of_version", F.lit(as_of).cast("long")
+    )
 
 
-def _full_sync_version(table: SnapshotTable) -> int | None:
-    """Newest FULL-SYNC marker (``synced_to_version``): the source version
-    as of which the derived table reflected the ENTIRE snapshot — stamped
-    only by refresh_full and catch_up, never by per-commit updates (those
-    recompute only their own commit's keys, so they cannot attest a full
-    sync)."""
-    for v in reversed(table.versions()):
-        s = (table.manifest(v) or {}).get("summary") or {}
-        if "synced_to_version" in s:
-            return s["synced_to_version"]
-    return None
+class IncrementalDerived(ChangeFeedConsumer):
+    """Shared scaffolding for the derived tables: one SnapshotTable keyed on
+    ``KEY_COLS`` and ordered by ``as_of_version``.
 
+    Attach adopts the persisted layout; a table created under another
+    ordering would make the invariant silently inert AND break ``gone``
+    tombstones (they carry only the keys, so they'd sort last and never
+    win). :meth:`_attach` fails loudly instead: rebuild via refresh_full.
 
-def _missed_epochs(
-    source: SnapshotTable, derived: SnapshotTable
-) -> tuple[list[int] | None, int | None]:
-    """Fact epochs a derived maintainer missed — the signature of a crash
-    between a fact commit and its derived update, or of the maintainer
-    being enabled on a fact table with history.
-
-    Incorporated epochs = the derived table's own applied set (per-commit
-    updates merge under the fact epoch ids) plus everything applied at the
-    last FULL-SYNC marker (a refresh under a synthetic epoch id still
-    reflects those epochs' state). Gating on epoch SETS, not the provenance
-    watermark, is what makes out-of-order direct-API misses detectable: a
-    later commit's successful update moves ``derived_from_version`` past a
-    missed earlier commit, but the missed epoch stays absent from the set.
-
-    Returns ``(None, _)`` when synced (the steady state — manifest reads
-    only). Otherwise ``(missing, base)`` where ``base`` is the newest
-    retained fact snapshot predating every missing epoch — its change feed
-    covers all of them (the superset recompute over keys touched since is
-    idempotent) — or None when no such snapshot survives (or a full-sync
-    marker's snapshot expired), meaning the caller must refresh_full."""
-    from etl_spark.lake.table import _all_applied_epochs
-
-    m_now = source.manifest() if source.exists() else None
-    if m_now is None:
-        return None, None
-    mine: set[int] = set()
-    if derived.exists():
-        mine = _all_applied_epochs(derived.manifest())
-        fs = _full_sync_version(derived)
-        if fs is not None:
-            try:
-                mine |= _all_applied_epochs(source.manifest(fs))
-            except FileNotFoundError:
-                # expired full-sync snapshot: its epochs are a subset of
-                # today's, so treating them as not-incorporated can only
-                # ENLARGE the repair (falls through to refresh_full) —
-                # never miss one
-                pass
-    missing = _all_applied_epochs(m_now) - mine
-    if not missing:
-        return None, None
-    for v in reversed(source.versions()):
-        try:
-            m_v = source.manifest(v)
-        except FileNotFoundError:
-            continue  # expired between the listing and the read
-        if not (_all_applied_epochs(m_v) & missing):
-            return sorted(missing), v
-    return sorted(missing), None
-
-
-class IncrementalDerived:
-    """Shared scaffolding for incrementally maintained derived tables.
-
-    Holds the invariants the two concrete tables (:class:`RepoRollup`,
-    :class:`CleanCorpus`) must share in ONE place:
-
-    - the output is itself a SnapshotTable keyed on ``KEY_COLS`` and ordered
-      by ``as_of_version`` — the SOURCE SNAPSHOT VERSION the row was computed
-      at. The order must be the source version, not any source-derived column
-      (e.g. last_commit): a CDC DELETE can make a recomputed value tie with
-      or drop below the stale row's, so source columns are not monotonic
-      under deletes and the stale row would win latest-wins.
-    - attach adopts the persisted layout; a table created before the
-      as_of_version ordering would make the invariant silently inert AND
-      break ``gone`` tombstones (they carry only the keys, so they'd sort
-      last and never win). Fail loudly: rebuild via refresh_full.
-    - after a fact-table commit, touched keys come from the commit's new
-      files (small, bucket-pure). Touched keys with no recomputed row (every
-      fact row CDC-deleted, or the new content fails a gate) are tombstoned
-      in the SAME commit — two commits would break epoch idempotence.
-    - ``refresh_full`` ≡ the incremental path (differential-tested),
-      including the zombie-row tombstoning of keys the recompute no longer
-      produces.
-
-    Subclasses define ``KEY_COLS``, ``KIND`` (error messages), ``_expr``
-    (full recompute over current snapshot rows) and ``_recompute`` (the
-    per-commit update set from the commit's new rows / touched keys).
+    Subclasses define ``KEY_COLS``, ``KIND`` (error messages) and
+    ``_recompute`` (derived rows for a set of current source rows).
     """
 
     KEY_COLS: tuple[str, ...] = ()
@@ -186,131 +108,82 @@ class IncrementalDerived:
                  n_buckets: int = 16) -> None:
         self.spark = spark
         self.source = table
-        self.table = SnapshotTable(
-            spark, root, key_cols=self.KEY_COLS, order_col="as_of_version",
-            n_buckets=n_buckets,
+        self.table = self._attach(root, self.KEY_COLS, n_buckets)
+
+    def _attach(self, root: str, key_cols: tuple[str, ...], n_buckets: int,
+                bucket_cols: tuple[str, ...] | None = None) -> SnapshotTable:
+        t = SnapshotTable(
+            self.spark, root, key_cols=key_cols, bucket_cols=bucket_cols,
+            order_col="as_of_version", n_buckets=n_buckets,
         )
-        if self.table.exists() and self.table.order_col != "as_of_version":
+        if t.exists() and t.order_col != "as_of_version":
             raise ValueError(
-                f"{self.KIND} at {root} is ordered by "
-                f"{self.table.order_col!r}; this version maintains derived "
-                "tables ordered by as_of_version — rebuild it (refresh_full) "
-                "into a fresh root"
+                f"{self.KIND} at {root} is ordered by {t.order_col!r}; this "
+                "version maintains derived tables ordered by as_of_version "
+                "— rebuild it (refresh_full) into a fresh root"
             )
+        if t.exists() and bucket_cols and tuple(t.placement_cols) != bucket_cols:
+            # 1-tuple probe keys vs a full-key placement schema would break
+            # the scan_prefixes contract
+            raise ValueError(
+                f"{self.KIND} at {root} places rows by "
+                f"{tuple(t.placement_cols)!r}; the inverted index requires "
+                f"prefix bucketing on {bucket_cols!r} — rebuild it "
+                "(refresh_full) into a fresh root"
+            )
+        return t
 
-    # -- subclass hooks --------------------------------------------------
-    def _expr(self, rows: DataFrame) -> DataFrame:
-        """Derived rows from CURRENT source rows (tombstones pre-filtered)."""
+    def _recompute(self, rows: DataFrame, touched: DataFrame | None,
+                   version: int) -> DataFrame:
+        """Derived rows from ``rows`` — the current source rows (tombstones
+        INCLUDED: filter if row-local) of the ``touched`` keys, or of every
+        key when ``touched`` is None — as of source ``version``."""
         raise NotImplementedError
 
-    def _recompute(self, new_rows: DataFrame, touched: DataFrame) -> DataFrame:
-        """Update set for one commit, from its raw new-file rows (tombstones
-        INCLUDED — filter if row-local) and the distinct touched keys."""
-        raise NotImplementedError
+    # -- the consumer hooks ------------------------------------------------
+    def offset(self) -> int | None:
+        return offset_summary(self.table, OFFSET_MARKER).get(OFFSET_MARKER)
 
-    # -- shared maintenance ------------------------------------------------
+    synced_to_version = offset
+
+    def _marks(self, version: int) -> dict[str, Any]:
+        """Offset record: fact ``version`` and its ``rollbacks`` counter."""
+        m = self.source.manifest(version)
+        return {OFFSET_MARKER: version, "source_rollbacks": m.get("rollbacks", 0)}
+
+    def _stand_in(self) -> dict | None:
+        """The table's own applied ids are the fact's at the offset: the
+        newest retained fact snapshot with those ids and the recorded
+        ``rollbacks`` counter holds the same rows (only maintenance between)."""
+        rec = offset_summary(self.table, OFFSET_MARKER).get("source_rollbacks")
+        want = (self.table.applied_epochs(), rec)
+        for v in reversed(self.source.versions()):
+            m = self.source.manifest(v)
+            if (_all_applied_epochs(m), m.get("rollbacks", 0)) == want:
+                return m
+
     def update_for_commit(self, commit: dict[str, Any]) -> dict[str, Any]:
-        """Maintain the derived table after one fact-table commit; upserts
-        run under the same epoch ids — idempotent if replayed."""
-        if commit.get("skipped"):
-            return {"skipped": True}
-        new_files = commit.get("new_files") or []
-        if not new_files:
-            return {"skipped": True}
-        keys = list(self.KEY_COLS)
-        as_of = int(commit["version"])
-        new_rows = self.source._read_files(new_files, self.source.schema())
-        touched = new_rows.select(*keys).distinct()
-        updates = self._recompute(new_rows, touched).withColumn(
-            "as_of_version", F.lit(as_of).cast("long")
-        )
-        gone = (
-            touched.join(updates.select(*keys), keys, "left_anti")
-            .withColumn("as_of_version", F.lit(as_of).cast("long"))
-            .withColumn(TOMBSTONE_COL, F.lit(True))
-        )
-        return self.table.merge_epochs(
-            updates.unionByName(gone, allowMissingColumns=True),
-            [int(e) for e in commit["epochs"]],
-            extra_summary={"derived_from_version": commit.get("version")},
-            assume_deduped=True,  # one row per key across both branches
-        )
-
-    def refresh_full(self, epoch_id: int | list[int]) -> dict[str, Any]:
-        """Recompute every key from scratch (bootstrap / repair)."""
-        keys = list(self.KEY_COLS)
-        as_of = int(self.source.current_version())
-        updates = self._expr(self.source.read()).withColumn(
-            "as_of_version", F.lit(as_of).cast("long")
-        )
-        if self.table.exists():
-            gone = (
-                self.table.read()
-                .select(*keys)
-                .join(updates.select(*keys), keys, "left_anti")
-                .withColumn("as_of_version", F.lit(as_of).cast("long"))
-                .withColumn(TOMBSTONE_COL, F.lit(True))
-            )
-            updates = updates.unionByName(gone, allowMissingColumns=True)
-        return self.table.merge_epochs(
-            updates, _as_epoch_list(epoch_id),
-            extra_summary={"full_refresh": True,
-                           "derived_from_version": as_of,
-                           "synced_to_version": as_of},
-            assume_deduped=True,  # one row per key across both branches
-        )
-
-    def synced_to_version(self) -> int | None:
-        """SOURCE snapshot version this table last derived from (the stage
-        watermark). Walks retained snapshots newest-first so an interleaved
-        maintenance commit (compaction, rollback) whose summary lacks the
-        marker doesn't hide it."""
-        return _synced_to_version(self.table)
+        """Maintain the table up to one fact commit (a lag-one sync)."""
+        return self.sync(commit.get("version"))
 
     def catch_up(self) -> dict[str, Any] | None:
-        """Heal the crash window between a fact-table commit and this
-        maintainer's :meth:`update_for_commit`. ``replay()`` discovers
-        pending work from the FACT table's applied epochs, so a commit whose
-        derived update died after the fact commit is never re-presented —
-        without this check the derived table silently diverges forever
-        (update_for_commit's epoch idempotence only covers RE-running an
-        update, not skipping one). Cheap when synced (the steady state):
-        manifest reads only, no Spark job. On a detected gap it recomputes
-        the keys changed since the newest fact snapshot predating the gap
-        (see :func:`_missed_epochs`) from the CURRENT snapshot and merges
-        under exactly the missed epoch ids (idempotent); when no such
-        snapshot survives retention it falls back to :meth:`refresh_full`
-        under those ids."""
-        missing, base = _missed_epochs(self.source, self.table)
-        if missing is None:
-            return None
-        if base is None:
-            return self.refresh_full(missing)
-        keys = list(self.KEY_COLS)
-        as_of = int(self.source.current_version())
-        feed = self.source.changes_between(base)
-        touched = feed.select(*keys).distinct()
-        # current rows for the touched keys, NOT the raw feed rows: under
-        # MOR a key updated twice since the watermark has several feed rows,
-        # and a delete-then-reinsert needs the latest-wins fold — read() is
-        # the already-correct current-state fold
-        current = self.source.read().join(touched, keys, "left_semi")
-        updates = self._recompute(current, touched).withColumn(
-            "as_of_version", F.lit(as_of).cast("long")
+        """Sync to the fact head; None when there was nothing to do."""
+        out = self.sync()
+        return None if out.get("skipped") else out
+
+    def _rebuild(self, version, ids, reason):
+        rows = self._recompute(self.source.read(version), None, version)
+        return self.table.replace_all(
+            rows.withColumn("as_of_version", F.lit(version).cast("long")), ids,
+            extra_summary={**self._marks(version), "full_resync": reason},
         )
-        gone = (
-            touched.join(updates.select(*keys), keys, "left_anti")
-            .withColumn("as_of_version", F.lit(as_of).cast("long"))
-            .withColumn(TOMBSTONE_COL, F.lit(True))
-        )
+
+    def _merge(self, feed, ids, version):
+        touched = feed.select(*self.KEY_COLS).distinct()
+        updates = self._recompute(feed, touched, version)
         return self.table.merge_epochs(
-            updates.unionByName(gone, allowMissingColumns=True), missing,
-            # catch_up restores the full-sync invariant (synced before the
-            # gap + every missing epoch re-derived = synced now), so it may
-            # stamp the full-sync marker; per-commit updates may not
-            extra_summary={"derived_from_version": as_of,
-                           "synced_to_version": as_of, "catch_up": True},
-            assume_deduped=True,
+            _with_gone(updates, touched, version), ids,
+            extra_summary=self._marks(version), assume_deduped=True,
         )
 
     def read(self) -> DataFrame:
@@ -320,22 +193,20 @@ class IncrementalDerived:
 class RepoRollup(IncrementalDerived):
     """Incrementally maintained per-repo rollup of a snapshot table.
 
-    The rollup is a per-key AGGREGATE, so a commit's update set is
+    The rollup is a per-key AGGREGATE, so a round's update set is
     recomputed from the SNAPSHOT (semi-joined to the touched repos — small,
-    broadcastable), not from the commit rows alone.
+    broadcastable), not from the feed rows alone.
     """
 
     KEY_COLS = ("repo",)
     KIND = "rollup"
 
-    def _expr(self, rows: DataFrame) -> DataFrame:
+    def _recompute(self, rows, touched, version):
+        if touched is not None:
+            rows = self.source.read(version).join(
+                F.broadcast(touched), "repo", "left_semi"
+            )
         return rollup_expr(rows)
-
-    def _recompute(self, new_rows: DataFrame, touched: DataFrame) -> DataFrame:
-        current = self.source.read().join(
-            F.broadcast(touched), "repo", "left_semi"
-        )
-        return rollup_expr(current)
 
 
 def explode_lines(rows: DataFrame) -> DataFrame:
@@ -351,91 +222,6 @@ def explode_lines(rows: DataFrame) -> DataFrame:
     ).select(
         "repo", "path", "commit", (F.col("_pos") + 1).cast("long").alias("line_no"), "line"
     )
-
-
-class LineIndex:
-    """Stage-3 derived projection: per-line index over immutable file versions.
-
-    The reference's transform stage processes each trajectory id exactly once,
-    discovering work via a per-stage WATERMARK plus ``ls EXCEPT cs`` repair
-    (SURVEY §3.4, J4; duckdb_construct_trajs_stops.py:45-73,
-    duckdb_transform_ls_to_cs.py:56-60). File *versions* (repo, path, commit)
-    are equally immutable, so the line index is append-only. Steady-state
-    discovery is O(delta): the index records the SOURCE SNAPSHOT VERSION it
-    last synced to, and pending versions come from the source's change feed
-    past that version (a manifest diff + epoch-provenance filter) — the
-    line-grained index itself is never scanned. The anti-join form survives
-    as :meth:`pending_versions_scan` (bootstrap / repair; differential-tested
-    equal).
-    """
-
-    def __init__(self, spark: SparkSession, table: SnapshotTable, root: str,
-                 n_buckets: int = 32) -> None:
-        self.spark = spark
-        self.source = table
-        self.table = SnapshotTable(
-            spark, root, key_cols=("repo", "path", "commit", "line_no"),
-            order_col="commit", n_buckets=n_buckets,
-        )
-
-    _VERSION_COLS = ("repo", "path", "commit", "content")
-
-    def synced_to_version(self) -> int | None:
-        """Source snapshot version the index last synced to (the stage
-        watermark). Walks retained index snapshots newest-first so an
-        interleaved maintenance commit (compaction, rollback) whose summary
-        lacks the marker doesn't reset discovery to a full rebuild."""
-        for v in reversed(self.table.versions()):
-            s = (self.table.manifest(v) or {}).get("summary") or {}
-            if "synced_to_version" in s:
-                return s["synced_to_version"]
-        return None
-
-    def pending_versions(self) -> DataFrame:
-        """Versions not yet indexed — O(delta, never O(index)).
-
-        Reads the source's change feed past the synced watermark: only files
-        NEW since that snapshot are scanned, filtered to rows whose epoch
-        provenance is new (carried rewrites excluded). Falls back to the
-        full state only on bootstrap or when the watermarked snapshot has
-        been expired from the source's history."""
-        sv = self.synced_to_version()
-        if sv is None:
-            return self.source.read().select(*self._VERSION_COLS)
-        try:
-            feed = self.source.changes_between(sv)
-        except FileNotFoundError:
-            # watermark snapshot expired: repair via the EXCEPT scan
-            return self.pending_versions_scan()
-        if TOMBSTONE_COL in feed.columns:
-            # a delete creates no new immutable version to index
-            feed = feed.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-        return feed.select(*self._VERSION_COLS)
-
-    def pending_versions_scan(self) -> DataFrame:
-        """J4 EXCEPT discovery (anti-join vs the full index) — the bootstrap/
-        repair path; O(index), so not for steady-state use."""
-        current = self.source.read().select(*self._VERSION_COLS)
-        if not self.table.exists():
-            return current
-        done = self.table.read().select("repo", "path", "commit").distinct()
-        return current.join(done, ["repo", "path", "commit"], "left_anti")
-
-    def update(self, epoch_ids: list[int]) -> dict[str, Any]:
-        """Index all pending versions in one idempotent commit, advancing the
-        watermark to the source version the pending set was computed at."""
-        cur = self.source.current_version()
-        lines = explode_lines(self.pending_versions())
-        return self.table.merge_epochs(
-            lines, [int(e) for e in epoch_ids],
-            extra_summary={"derived": "line_index",
-                           "synced_to_version": cur},
-            assume_deduped=True,  # line_no makes each exploded row unique
-        )
-
-    def read(self) -> DataFrame:
-        return self.table.read().drop("epoch")
-
 
 
 # --- derived clean corpus (CDC x training-data prep) ---------------------------
@@ -472,31 +258,22 @@ class CleanCorpus(IncrementalDerived):
     """Incrementally maintained CLEAN-CORPUS derived table — the bridge
     between the CDC half of the engine and the training-data prep half.
 
-    The prep is ROW-LOCAL, so unlike the rollup a commit's update set needs
-    no snapshot re-read at all: every live row in the commit's new files IS
-    a current row (COW rewrites produce post-merge files; MOR delta rows are
-    the winners for their keys), and the maintainer recomputes the prep on
-    exactly those rows — cost O(commit footprint). Keys whose current row is
-    a CDC tombstone or fails the quality gate fall to the shared ``gone``
-    branch. A full recompute (``refresh_full``) is differential-tested equal
-    to the incremental path, including under CDC deletes.
+    The prep is ROW-LOCAL, so unlike the rollup a round's update set needs
+    no snapshot re-read at all: every live row of the folded feed IS the
+    current row of its key, and the maintainer recomputes the prep on
+    exactly those rows — cost O(window footprint). Keys whose current row
+    is a CDC tombstone or fails the quality gate fall to the shared
+    ``gone`` branch.
     """
 
     KEY_COLS = ("repo", "path")
     KIND = "clean corpus"
 
-    def _expr(self, rows: DataFrame) -> DataFrame:
-        return clean_corpus_expr(rows)
-
-    def _recompute(self, new_rows: DataFrame, touched: DataFrame) -> DataFrame:
-        if TOMBSTONE_COL in new_rows.columns:
-            new_rows = new_rows.where(
-                ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-            )
-        return clean_corpus_expr(new_rows)
+    def _recompute(self, rows, touched, version):
+        return clean_corpus_expr(_live(rows))
 
 
-class DedupIndex:
+class DedupIndex(IncrementalDerived):
     """Incrementally maintained MinHash-LSH near-duplicate index —
     dedup-at-ingest for the CDC corpus at O(commit footprint) cost.
 
@@ -516,22 +293,21 @@ class DedupIndex:
       doc's OLD band rows are found here (bucket-pruned point reads), not
       by scanning the band table.
 
-    Maintenance per fact commit (same epoch ids -> idempotent on replay;
-    band merge FIRST so a crash between the two merges replays
-    deterministically — the sig table still holds the old bands. A crash
-    BETWEEN the fact commit and this update is healed by :meth:`catch_up`,
-    which the pipeline runs at replay start — the fact's applied-epoch
-    discovery would otherwise never re-present the commit):
+    A sync round merges the band table FIRST and the sig table second,
+    both under the same ids; the offset is read from ``sigs``. A crash
+    between the two merges leaves ``bands`` one round ahead: the next sync
+    first finishes that round (its band merge is a no-op, the sig table
+    still holds the old bands) and only then syncs on. A round:
 
-    1. touched docs = keys in the commit's new files (post-merge current
-       rows, per the CleanCorpus contract); live docs exclude tombstones.
+    1. touched docs = keys in the folded feed (current rows, per the
+       CleanCorpus contract); live docs exclude tombstones.
     2. new sigs/bands from live content (md5-derived Carter-Wegman family,
        bit-identical to the batch operator and its DuckDB oracle).
     3. old bands of touched docs from ``sigs``; band rows no longer
        produced are tombstoned in the SAME band-table commit.
-    4. new-pair detection (opt-in): probe ``bands`` with the epoch's band
+    4. new-pair detection (opt-in): probe ``bands`` with the round's band
        keys BEFORE merging (existing members only), plus new-vs-new within
-       the epoch; est_jaccard = agreeing signature fraction >= threshold.
+       the round; est_jaccard = agreeing signature fraction >= threshold.
 
     ``pairs_full()`` (near-dup pairs of the CURRENT corpus from the index
     state) is differential-tested equal to the batch operator over the
@@ -547,8 +323,8 @@ class DedupIndex:
     BAND_SIZE = 4
     SHINGLE_K = 3
 
-    # epochs with at most this many staged rows take the collected-key
-    # scan_prefixes probe paths (O(probed buckets)); bulk epochs switch to
+    # rounds touching at most this many docs take the collected-key
+    # scan_prefixes probe paths (O(probed buckets)); bulk rounds switch to
     # distributed semi-joins — same rows touched, no 10^5-key driver
     # round-trip, no per-bucket probe of every bucket
     probe_collect_limit = 4096
@@ -561,46 +337,18 @@ class DedupIndex:
         self.root = str(root)
         self.threshold = threshold
         self.detect_pairs = detect_pairs
-        self.bands = SnapshotTable(
-            spark, f"{root}/bands", key_cols=("band", "repo", "path"),
-            bucket_cols=("band",), order_col="as_of_version",
-            n_buckets=n_buckets,
+        self.bands = self._attach(f"{root}/bands", ("band", "repo", "path"),
+                                  n_buckets, bucket_cols=("band",))
+        # merged second: its offset is the index's
+        self.sigs = self.table = self._attach(
+            f"{root}/sigs", ("repo", "path"), n_buckets
         )
-        self.sigs = SnapshotTable(
-            spark, f"{root}/sigs", key_cols=("repo", "path"),
-            order_col="as_of_version", n_buckets=n_buckets,
-        )
-        # attach adopts a pre-existing table's persisted layout — same
-        # fail-loudly guard as IncrementalDerived: under another order_col
-        # the gone-tombstones (keys only) would never win latest-wins, and
-        # a bands table not prefix-bucketed on ``band`` breaks the
-        # scan_prefixes probe contract (1-tuple band keys vs a full-key
-        # placement schema). Rebuild via refresh_full into a fresh root.
-        for t, want_place in ((self.bands, ("band",)), (self.sigs, None)):
-            if not t.exists():
-                continue
-            if t.order_col != "as_of_version":
-                raise ValueError(
-                    f"dedup index table at {t.root} is ordered by "
-                    f"{t.order_col!r}; this version maintains it ordered by "
-                    "as_of_version — rebuild it (refresh_full) into a fresh "
-                    "root"
-                )
-            if want_place and tuple(t.placement_cols) != want_place:
-                raise ValueError(
-                    f"dedup index table at {t.root} places rows by "
-                    f"{tuple(t.placement_cols)!r}; the band inverted index "
-                    f"requires prefix bucketing on {want_place!r} — rebuild "
-                    "it (refresh_full) into a fresh root"
-                )
 
     # -- signature / banding (bit-identical to the batch operator) --------
     def _sig_bands(self, rows: DataFrame) -> DataFrame:
         """(repo, path, sig, bands array<string>) for current live rows.
         Band value = '<band_idx>:<md5 bucket>' — one string column so the
         band table's placement key is a single column."""
-        from etl_spark.operators.textdedup import minhash_signature_table
-
         docs = rows.select(
             F.struct("repo", "path").alias("_k"),
             F.col("content").alias("_text"),
@@ -628,124 +376,108 @@ class DedupIndex:
         )
 
     # -- maintenance -------------------------------------------------------
-    def update_for_commit(self, commit: dict[str, Any]) -> dict[str, Any]:
-        if commit.get("skipped") or not commit.get("new_files"):
-            return {"skipped": True}
-        as_of = int(commit["version"])
-        epochs = [int(e) for e in commit["epochs"]]
-        new_rows = self.source._read_files(
-            commit["new_files"], self.source.schema()
-        )
-        touched = new_rows.select("repo", "path").distinct()
-        live = new_rows
-        if TOMBSTONE_COL in live.columns:
-            live = live.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-        sparse = (commit.get("staged_rows") or 0) <= self.probe_collect_limit
-        return self._maintain(
-            live, touched, epochs, as_of, sparse=sparse,
-            staged_rows=int(commit.get("staged_rows") or 0),
-            detect=self.detect_pairs,
-        )
+    def sync(self, version: int | None = None) -> dict[str, Any]:
+        ahead = offset_summary(self.bands, OFFSET_MARKER).get(OFFSET_MARKER)
+        off = self.offset()
+        if ahead is not None and off is not None and ahead < off:
+            self.refresh_full()  # the band table was rolled back on its own
+        elif ahead is not None and ahead != off:
+            try:
+                super().sync(ahead)  # finish the interrupted round
+            except FileNotFoundError:
+                self.refresh_full()  # its source snapshot expired
+        return super().sync(version)
 
-    def _maintain(
-        self, live: DataFrame, touched: DataFrame, epochs: list[int],
-        as_of: int, *, sparse: bool, staged_rows: int, detect: bool,
-        full_sync: bool = False,
-    ) -> dict[str, Any]:
-        """Apply one maintenance round: (re)index ``live`` (the current
-        content of every ``touched`` doc; a touched doc absent from live was
-        CDC-deleted), tombstoning band/sig rows the recompute no longer
-        produces, all under ``epochs`` for idempotence."""
-        summary = {"derived_from_version": as_of}
-        if full_sync:
-            # catch_up restores the full-sync invariant; per-commit
-            # updates only attest their own epochs (see _full_sync_version)
-            summary["synced_to_version"] = as_of
-        new_sb = self._sig_bands(live).localCheckpoint(eager=True)
+    def _rebuild(self, version, ids, reason):
+        sb = self._sig_bands(self.source.read(version)).localCheckpoint(
+            eager=True
+        )
+        stamp = F.lit(version).cast("long")
+        summary = {**self._marks(version), "full_resync": reason}
+        r1 = self.bands.replace_all(
+            sb.select(F.explode("bands").alias("band"), "repo", "path", "sig")
+            .withColumn("as_of_version", stamp), ids, extra_summary=summary,
+        )
+        r2 = self.sigs.replace_all(
+            sb.select("repo", "path", "bands").withColumn("as_of_version", stamp),
+            ids, extra_summary=summary,
+        )
+        out = {"bands": r1, "sigs": r2}
+        if self.detect_pairs:  # every doc is new to a rebuilt index
+            out["new_pairs"] = self._report(self.pairs_full(), version)
+        _release_local_checkpoint(sb)
+        return out
+
+    def _maintain(self, feed: DataFrame, ids: list[int],
+                  as_of: int) -> dict[str, Any]:
+        """Apply one round: (re)index the live rows of the folded ``feed``
+        (the current content of every touched doc; a touched doc with no
+        live row was CDC-deleted), tombstoning band/sig rows the recompute
+        no longer produces, all under ``ids`` for idempotence."""
+        touched = feed.select("repo", "path").distinct()
+        summary = self._marks(as_of)
+        new_sb = self._sig_bands(_live(feed)).localCheckpoint(eager=True)
 
         # old band rows of every touched doc, via the sigs reverse map.
-        # SPARSE epochs (steady-state CDC: few docs) collect the keys and
+        # SPARSE rounds (steady-state CDC: few docs) collect the keys and
         # take the bucket-pruned scan_prefixes path — O(probed buckets).
-        # BULK epochs (backfill/catchup: most of the corpus) would pay a
+        # BULK rounds (backfill/catchup: most of the corpus) would pay a
         # driver round-trip of 10^5 keys AND probe every bucket anyway, so
         # they read the sigs table once and semi-join distributed — same
-        # rows touched, zero driver materialization.
-        if not self.sigs.exists():
-            old = self.spark.createDataFrame(
-                [], "repo string, path string, band string"
-            )
-        elif sparse:
-            doc_keys = [(r["repo"], r["path"]) for r in touched.collect()]
-            old = self.sigs.scan_prefixes(doc_keys).select(
-                "repo", "path", F.explode("bands").alias("band")
-            )
+        # rows touched; the bounded collect is what tells the two apart.
+        doc_keys = [
+            (r["repo"], r["path"])
+            for r in touched.limit(self.probe_collect_limit + 1).collect()
+        ]
+        sparse = len(doc_keys) <= self.probe_collect_limit
+        if sparse:
+            old = self.sigs.scan_prefixes(doc_keys)
         else:
-            old = (
-                self.sigs.read()
-                .join(touched, ["repo", "path"], "left_semi")
-                .select("repo", "path", F.explode("bands").alias("band"))
-            )
+            old = self.sigs.read().join(touched, ["repo", "path"], "left_semi")
+        old = old.select("repo", "path", F.explode("bands").alias("band"))
 
         new_band_rows = new_sb.select(
             F.explode("bands").alias("band"), "repo", "path", "sig"
         )
         pairs_found = None
-        if detect:
+        if self.detect_pairs:
             pairs_found = self._detect_pairs(
                 new_band_rows, touched, as_of, sparse
             )
 
-        stamp = F.lit(as_of).cast("long")
-        gone_bands = (
-            old.join(new_band_rows.select("band", "repo", "path"),
-                     ["band", "repo", "path"], "left_anti")
-            .withColumn("as_of_version", stamp)
-            .withColumn(TOMBSTONE_COL, F.lit(True))
-        )
-        band_updates = new_band_rows.withColumn("as_of_version", stamp)
-        # size hints keep a sparse epoch's staging exchange narrow (the
-        # fact commit's row count is exact from its staged footers); a bulk
-        # epoch's estimate exceeds the wide cap and changes nothing. With no
-        # count available (catch_up), pass None — the merge sizes itself.
+        # size hints keep a sparse round's staging exchange narrow; a bulk
+        # round passes None — the merge sizes itself
+        n_docs = len(doc_keys) if sparse else 0
         n_bands = self.NUM_HASHES // self.BAND_SIZE
         r1 = self.bands.merge_epochs(
-            band_updates.unionByName(gone_bands, allowMissingColumns=True),
-            epochs, extra_summary=summary,
+            _with_gone(new_band_rows, old, as_of), ids, extra_summary=summary,
             assume_deduped=True,
-            size_hint=max(1, staged_rows * n_bands * 256)
-            if staged_rows else None,
-        )
-        sig_updates = new_sb.select("repo", "path", "bands").withColumn(
-            "as_of_version", stamp
-        )
-        gone_sigs = (
-            touched.join(new_sb.select("repo", "path"),
-                         ["repo", "path"], "left_anti")
-            .withColumn("as_of_version", stamp)
-            .withColumn(TOMBSTONE_COL, F.lit(True))
+            size_hint=n_docs * n_bands * 256 or None,
         )
         r2 = self.sigs.merge_epochs(
-            sig_updates.unionByName(gone_sigs, allowMissingColumns=True),
-            epochs, extra_summary=summary,
+            _with_gone(new_sb.select("repo", "path", "bands"), touched, as_of),
+            ids, extra_summary=summary,
             assume_deduped=True,
-            size_hint=max(1, staged_rows * 512) if staged_rows else None,
+            size_hint=n_docs * 512 or None,
         )
-        _release_checkpoint(new_sb)
+        _release_local_checkpoint(new_sb)
         return {
             "bands": r1, "sigs": r2,
             **({"new_pairs": pairs_found} if pairs_found is not None else {}),
         }
 
+    _merge = _maintain
+
     def _detect_pairs(
         self, new_band_rows: DataFrame, touched: DataFrame, as_of: int,
         sparse: bool,
     ) -> int:
-        """Near-dups the commit introduces: new docs vs the EXISTING index
-        plus new-vs-new within the commit. A SPARSE commit probes only its
+        """Near-dups the round introduces: new docs vs the EXISTING index
+        plus new-vs-new within the round. A SPARSE round probes only its
         band keys' buckets (scan_prefixes — O(probed buckets)); a BULK
-        commit collides with most bands anyway, so it joins against the
+        round collides with most bands anyway, so it joins against the
         index read distributed (the band equi-join restricts to colliding
-        bands; no driver key round-trip). Index rows of the commit's OWN
+        bands; no driver key round-trip). Index rows of the round's OWN
         touched docs are superseded (updated content or CDC delete) and
         dropped before the join — their current rows, if still live, sit in
         the probe side — so the report never pairs against deleted or stale
@@ -754,151 +486,39 @@ class DedupIndex:
         Written to ``root/pairs/asof=<version>`` (overwrite ->
         replay-idempotent); returns the pair count."""
         probe = new_band_rows.select("band", "repo", "path", "sig")
-        both = probe.withColumn("_new", F.lit(True))
-        if self.bands.exists():
-            if sparse:
-                band_keys = [
-                    (r["band"],)
-                    for r in probe.select("band").distinct().collect()
-                ]
-                existing = self.bands.scan_prefixes(band_keys).select(
-                    "band", "repo", "path", "sig"
-                )
-            else:
-                existing = self.bands.read().select(
-                    "band", "repo", "path", "sig"
-                )
-            existing = existing.join(touched, ["repo", "path"], "left_anti")
-            both = both.unionByName(
-                existing.withColumn("_new", F.lit(False))
-            )
-        a, b = both.alias("a"), both.alias("b")
-        ida = F.concat_ws(":", F.col("a.repo"), F.col("a.path"))
-        idb = F.concat_ws(":", F.col("b.repo"), F.col("b.path"))
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band")) & (ida < idb)
-                & (F.col("a._new") | F.col("b._new")),
-            )
-            .select(
-                ida.alias("id_a"), idb.alias("id_b"),
-                F.col("a.sig").alias("_sa"), F.col("b.sig").alias("_sb"),
-            )
-            .distinct()
+        if sparse:
+            band_keys = [
+                (r["band"],)
+                for r in probe.select("band").distinct().collect()
+            ]
+            existing = self.bands.scan_prefixes(band_keys)
+        else:
+            existing = self.bands.read()
+        existing = existing.select("band", "repo", "path", "sig").join(
+            touched, ["repo", "path"], "left_anti"
         )
-        pairs = cand.withColumn(
-            "est_jaccard",
-            F.round(
-                F.size(F.filter(
-                    F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
-                    lambda eq: eq,
-                )) / F.lit(float(self.NUM_HASHES)),
-                6,
-            ),
-        ).where(F.col("est_jaccard") >= self.threshold).select(
-            "id_a", "id_b", "est_jaccard"
+        both = probe.withColumn("_new", F.lit(True)).unionByName(
+            existing.withColumn("_new", F.lit(False))
         )
+        return self._report(self._pairs(both, new_only=True), as_of)
+
+    def _report(self, pairs: DataFrame, as_of: int) -> int:
         out = f"{self.root}/pairs/asof={as_of}"
         pairs.write.mode("overwrite").parquet(out)
         return self.spark.read.parquet(out).count()
 
-    def synced_to_version(self) -> int | None:
-        """FACT snapshot version the index last derived from (stamped on
-        the bands table — the first of the two merges, so a crash between
-        them leaves the watermark pointing at the interrupted round and
-        catch_up re-runs it)."""
-        return _synced_to_version(self.bands)
-
-    def catch_up(self) -> dict[str, Any] | None:
-        """Heal the crash window between a fact commit and
-        :meth:`update_for_commit` — same contract as
-        :meth:`IncrementalDerived.catch_up` (which see): no-op when synced,
-        re-derives the touched keys' current state under the missed epoch
-        ids when a gap is found, refresh_full when the watermark snapshot
-        expired. Per-epoch pair REPORTS are not rebuilt — they are
-        best-effort commit telemetry; the index itself (hence
-        ``pairs_full``) is fully repaired."""
-        missing, sv = _missed_epochs(self.source, self.bands)
-        if missing is None:
-            return None
-        if sv is None:
-            return self.refresh_full(missing)
-        as_of = int(self.source.current_version())
-        feed = self.source.changes_between(sv)
-        touched = feed.select("repo", "path").distinct()
-        live = self.source.read().join(touched, ["repo", "path"], "left_semi")
-        return self._maintain(
-            live, touched, missing, as_of,
-            sparse=False, staged_rows=0, detect=False,
-        )
-
-    def refresh_full(self, epoch_id: int | list[int]) -> dict[str, Any]:
-        """Build/repair the whole index from the CURRENT fact snapshot —
-        bootstrap for tables that predate the index, or recovery after a
-        divergence. Same contract as the other derived tables: stale rows
-        (docs gone from the corpus, band rows the recompute no longer
-        produces) are tombstoned in the SAME commit, so refresh_full ≡ the
-        incremental path."""
-        as_of = int(self.source.current_version())
-        stamp = F.lit(as_of).cast("long")
-        sb = self._sig_bands(self.source.read()).localCheckpoint(eager=True)
-        new_band_rows = sb.select(
-            F.explode("bands").alias("band"), "repo", "path", "sig"
-        )
-        band_updates = new_band_rows.withColumn("as_of_version", stamp)
-        gone_bands = None
-        if self.bands.exists():
-            gone_bands = (
-                self.bands.read().select("band", "repo", "path")
-                .join(new_band_rows.select("band", "repo", "path"),
-                      ["band", "repo", "path"], "left_anti")
-                .withColumn("as_of_version", stamp)
-                .withColumn(TOMBSTONE_COL, F.lit(True))
-            )
-            band_updates = band_updates.unionByName(
-                gone_bands, allowMissingColumns=True
-            )
-        r1 = self.bands.merge_epochs(
-            band_updates, _as_epoch_list(epoch_id),
-            extra_summary={"full_refresh": True,
-                           "derived_from_version": as_of},
-            assume_deduped=True,
-        )
-        sig_updates = sb.select("repo", "path", "bands").withColumn(
-            "as_of_version", stamp
-        )
-        if self.sigs.exists():
-            gone_sigs = (
-                self.sigs.read().select("repo", "path")
-                .join(sb.select("repo", "path"), ["repo", "path"],
-                      "left_anti")
-                .withColumn("as_of_version", stamp)
-                .withColumn(TOMBSTONE_COL, F.lit(True))
-            )
-            sig_updates = sig_updates.unionByName(
-                gone_sigs, allowMissingColumns=True
-            )
-        r2 = self.sigs.merge_epochs(
-            sig_updates, _as_epoch_list(epoch_id),
-            extra_summary={"full_refresh": True,
-                           "derived_from_version": as_of},
-            assume_deduped=True,
-        )
-        _release_checkpoint(sb)
-        return {"bands": r1, "sigs": r2}
-
     # -- reads ---------------------------------------------------------------
-    def pairs_full(self) -> DataFrame:
-        """Near-dup pairs of the CURRENT corpus, from the index state alone
-        (band-key self-join + signature-agreement estimate) — must equal
-        the batch operator over the fact snapshot."""
-        idx = self.bands.read().select("band", "repo", "path", "sig")
+    def _pairs(self, idx: DataFrame, new_only: bool = False) -> DataFrame:
+        """Band-key self-join of ``idx`` (band, repo, path, sig[, _new]) +
+        signature-agreement estimate, thresholded."""
         a, b = idx.alias("a"), idx.alias("b")
         ida = F.concat_ws(":", F.col("a.repo"), F.col("a.path"))
         idb = F.concat_ws(":", F.col("b.repo"), F.col("b.path"))
+        cond = (F.col("a.band") == F.col("b.band")) & (ida < idb)
+        if new_only:
+            cond = cond & (F.col("a._new") | F.col("b._new"))
         cand = (
-            a.join(b, (F.col("a.band") == F.col("b.band")) & (ida < idb))
+            a.join(b, cond)
             .select(
                 ida.alias("id_a"), idb.alias("id_b"),
                 F.col("a.sig").alias("_sa"), F.col("b.sig").alias("_sb"),
@@ -918,8 +538,7 @@ class DedupIndex:
             "id_a", "id_b", "est_jaccard"
         )
 
-
-def _release_checkpoint(df: DataFrame) -> None:
-    from etl_spark.operators.textdedup import _release_local_checkpoint
-
-    _release_local_checkpoint(df)
+    def pairs_full(self) -> DataFrame:
+        """Near-dup pairs of the CURRENT corpus, from the index state alone
+        — must equal the batch operator over the fact snapshot."""
+        return self._pairs(self.bands.read().select("band", "repo", "path", "sig"))

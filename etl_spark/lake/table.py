@@ -767,7 +767,10 @@ class SnapshotTable:
         m = self.manifest()
         return T.StructType.fromJson(m["schema"]) if m else None
 
-    def _commit_manifest(self, manifest: dict[str, Any], base_version: int | None = None) -> int:
+    def _commit_manifest(
+        self, manifest: dict[str, Any], base_version: int | None = None,
+        *, rollback: bool = False,
+    ) -> int:
         """Atomically publish a manifest as the next version.
 
         write tmp -> fsync -> hard-link to the final name -> unlink tmp.
@@ -775,9 +778,20 @@ class SnapshotTable:
         writer planned against); if a concurrent writer committed first, the
         link raises FileExistsError and the caller must re-plan — Iceberg's
         optimistic-concurrency swap.
+
+        Every manifest carries the durable ``rollbacks`` counter forward from
+        its base (a ``rollback`` commit adds one; manifests without the field
+        read as 0): change-feed consumers compare it across their sync
+        window, so a rollback stays visible after its own snapshot expired.
         """
         if base_version is None:
             base_version = self.current_version() or 0
+        try:
+            base = self.manifest(base_version) if base_version else None
+        except FileNotFoundError:
+            # only a newer commit lets the base expire: a lost race
+            raise FileExistsError(f"base snapshot v{base_version} expired")
+        manifest["rollbacks"] = (base or {}).get("rollbacks", 0) + int(rollback)
         version = base_version + 1
         manifest["version"] = version
         manifest["committed_at"] = time.time()
@@ -1391,7 +1405,7 @@ class SnapshotTable:
         cur = self.current_version()
         new = {k: v for k, v in m.items() if k != "commit_stats"}
         new.update({"summary": {"rollback_of": version}, "parent": cur})
-        v = self._commit_manifest(new, base_version=cur)
+        v = self._commit_manifest(new, base_version=cur, rollback=True)
         # the restored snapshot carries ITS layout (a rollback across a
         # rebucket restores the old bucket count) — re-adopt it so this
         # handle keeps writing under the now-current scheme instead of
@@ -1883,7 +1897,7 @@ class SnapshotTable:
                 "fold_broadcast_rows": self.fold_broadcast_rows,
                 "compact_after_commit": self.compact_after_commit,
                 "rewrite_probe": self.rewrite_probe,
-                "summary": {**(extra_summary or {}), "replace_all": True},
+                "summary": {**(extra_summary or {}), "replace_all": epoch_space},
                 "parent": m["version"] if m else None,
             }
             self._attach_files(manifest, new_files)
@@ -1956,9 +1970,13 @@ class SnapshotTable:
         prev: dict[str, set[int]] = {}
         for v in self.versions():
             mv = self.manifest(v)
-            if "rollback_of" in (mv.get("summary") or {}):
+            s = mv.get("summary") or {}
+            if "rollback_of" in s:
                 # an explicit rollback legitimately shrinks the applied sets
                 prev = {}
+            if isinstance(s.get("replace_all"), str):
+                # a replace_all resets the one id space it names by contract
+                prev.pop(_space_key(s["replace_all"]), None)
             for k in [k for k in mv if k.startswith("applied_epochs")]:
                 cur = decode_epoch_ranges(mv[k])
                 if not prev.get(k, set()) <= cur:

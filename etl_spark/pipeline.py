@@ -323,25 +323,22 @@ class IngestPipeline:
             # derived maintenance must NOT run — after publish_staged, the
             # next replay()'s healers cover both (_backfill_log rebuilds
             # lineage from row-level provenance; each maintainer's
-            # catch_up() re-derives the published epochs' keys)
+            # catch_up() syncs over the published commit)
             stats.events_applied = commit.get("staged_rows") or 0
             stats.extra["staged"] = commit["staged"]
             stats.seconds = time.time() - t0
             return stats
         if not commit.get("skipped"):
             self._log_lineage(commit)
+            # stage-2 derived tables, each synced up to this commit (a lag
+            # of one): exactly the keys in the commit's change feed are
+            # recomputed (SURVEY §3.3 / P2)
             if self.clean_corpus is not None:
-                # stage-2 derived table: clean corpus maintained for exactly
-                # the commit-touched keys (row-local, O(commit footprint))
                 self.clean_corpus.update_for_commit(commit)
             if self.rollup is not None:
-                # stage-2 derived table: per-repo rollup maintained for
-                # exactly the repos this commit touched (SURVEY §3.3 / P2)
                 self.rollup.update_for_commit(commit)
             if self.dedup_index is not None:
-                # stage-2 derived table: near-dup LSH index maintained for
-                # exactly the commit's docs; per-epoch new-pair report under
-                # _dedup/pairs/asof=<version>
+                # per-commit new-pair report under _dedup/pairs/asof=<version>
                 idx_stats = self.dedup_index.update_for_commit(commit)
                 if "new_pairs" in idx_stats:
                     stats.extra["near_dup_pairs"] = idx_stats["new_pairs"]
@@ -517,10 +514,10 @@ class IngestPipeline:
             self._backfill_log(epoch)
         # Heal crash-between-fact-commit-and-derived-update: pending-segment
         # discovery runs off the FACT epochs, so a commit whose derived
-        # update died is never re-presented — each maintainer checks its
-        # own epoch watermark (manifest reads only when synced) and
-        # re-derives exactly the missed commits' keys if not. Also
-        # bootstraps a maintainer newly enabled on a table with history.
+        # update died is never re-presented — each maintainer syncs from
+        # its own offset to the fact head (manifest reads only when synced).
+        # The same call bootstraps a maintainer newly enabled on a table
+        # with history and rebuilds one after a fact rollback.
         for maint in (self.clean_corpus, self.rollup, self.dedup_index):
             if maint is not None:
                 maint.catch_up()

@@ -1,38 +1,28 @@
 """Table-to-table CDC replication — the consumer face of the change feed.
 
 ``Mirror`` keeps a downstream :class:`SnapshotTable` in sync with a source
-table by polling ``changes_between`` — the lakehouse analog of a replica
-tailing a primary's binlog, generalizing the reference's staged-consumer
-pattern (each stage incrementally consumes the previous stage's new rows,
-SURVEY §3.3) to cross-table replication:
+table — the lakehouse analog of a replica tailing a primary's binlog. It is
+a :class:`~etl_spark.consumer.ChangeFeedConsumer` and runs the same
+``sync()`` as the derived tables (see ``etl_spark.consumer`` for the
+contract: offset, resync check, ``replace_all`` rebuild, one merge of the
+folded feed). What is the mirror's own:
 
-- **Incremental sync** reads only the feed between the consumer's recorded
-  source version and the source head — O(changed data) when the source
-  carries per-row ``epoch`` provenance (every pipeline table does): the
-  feed's epoch filter excludes rows merely REWRITTEN into new files, so a
-  source compaction costs the mirror nothing. On a table WITHOUT the
-  provenance column the feed degrades to file granularity — still correct
-  by latest-wins idempotence, but a source compaction re-ships every
-  rewritten file's rows. Tombstones flow through unchanged (a delete on
-  the source deletes on the mirror via the same latest-wins arbitration);
-  the ``epoch`` provenance itself is RE-STAMPED into the mirror's own id
-  domain (the synced source version — see ``_stamp_provenance``), so the
-  replica's own change feed stays exact for chained consumers.
-- **Exactly-once** rides the destination table's applied-epoch machinery in
-  a dedicated ``mirror`` id space: epoch ids ARE source snapshot versions,
-  so a crashed/re-run sync is a metadata no-op and the consumer offset
-  needs no side store.
-- **Self-healing**: a source rollback (applied-epoch shrink or a retained
-  ``rollback_of`` marker inside the sync window) or an expired consumer
-  watermark (the feed base's manifest is gone) degrades to a FULL resync —
-  the mirror is REPLACED with the source's current state
-  (``SnapshotTable.replace_all``), never merged: a fix-and-replay can
-  re-issue a key under the same order value with different content, and a
-  purged key must simply vanish — both beyond what latest-wins
-  arbitration can express. A rollback whose marker expired before the
-  next sync poll and whose re-replay re-applied the same epoch ids is
-  healed only by the shrink check; the operational rule: poll at least
-  as often as snapshot retention.
+- **Ids**: the mirror merges in a dedicated ``mirror`` id space whose ids
+  ARE source snapshot versions, so its offset is its newest applied id
+  (no side store) and a crashed/re-run sync is a metadata no-op. Every
+  version in the window gets an id — a source compaction moves the offset
+  too, at no data cost when the source carries per-row ``epoch``
+  provenance (the feed's epoch filter excludes rows merely REWRITTEN into
+  new files). Without that column the feed degrades to file granularity —
+  still correct by latest-wins idempotence.
+- **Provenance**: tombstones flow through unchanged (a delete on the source
+  deletes on the mirror via the same latest-wins arbitration); the
+  ``epoch`` column is RE-STAMPED into the mirror's id domain (the synced
+  source version — see ``_stamp_provenance``), so the replica's own change
+  feed stays exact for chained consumers.
+- **Identity**: a replica records which source it mirrors and refuses to
+  sync from another one, or to bootstrap over a table that is not a
+  mirror.
 
 Scale: the incremental path moves exactly the feed (one arranged shuffle on
 the destination's key space); the resync path is one full source read — the
@@ -46,12 +36,13 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.lake.table import SnapshotTable, _all_applied_epochs
+from etl_spark.consumer import ChangeFeedConsumer, offset_summary
+from etl_spark.lake.table import SnapshotTable
 
 MIRROR_SPACE = "mirror"
 
 
-class Mirror:
+class Mirror(ChangeFeedConsumer):
     """Replicate ``src`` into a SnapshotTable at ``dst_root``.
 
     The destination adopts the source's key/order columns; its bucket count
@@ -66,91 +57,63 @@ class Mirror:
         n_buckets: int | None = None,
     ) -> None:
         self.spark = spark
-        self.src = src
+        self.source = self.src = src
         self.dst = SnapshotTable(
             spark, dst_root, key_cols=src.key_cols, order_col=src.order_col,
             n_buckets=n_buckets or src.n_buckets,
         )
 
-    def synced_version(self) -> int | None:
+    def offset(self) -> int | None:
         """Newest source snapshot version this mirror has applied (the
-        consumer offset — lives in the destination manifest's ``mirror``
-        epoch space, no side store)."""
+        consumer offset — its newest ``mirror``-space id)."""
         applied = self.dst.applied_epochs(MIRROR_SPACE)
         return max(applied) if applied else None
 
-    # -- internals -------------------------------------------------------
+    synced_version = offset
 
-    def _needs_resync(self, v_from: int, v_to: int) -> str | None:
-        """Why the incremental feed can't be trusted, or None if it can."""
-        try:
-            m_from = self.src.manifest(v_from)
-        except FileNotFoundError:
-            return "watermark_expired"
-        m_to = self.src.manifest(v_to)
-        if _all_applied_epochs(m_from) - _all_applied_epochs(m_to):
-            return "applied_set_shrank"  # rolled back, not (fully) re-applied
-        for v in range(v_from + 1, v_to + 1):
-            try:
-                s = (self.src.manifest(v) or {}).get("summary") or {}
-            except FileNotFoundError:
-                continue  # expired intermediate: endpoint checks only
-            if "rollback_of" in s:
-                # a rollback + re-replay can re-apply the SAME epoch ids
-                # with DIFFERENT rows (the fix-and-replay pattern); the
-                # feed's epoch filter would hide the fix
-                return "rollback_in_window"
-        return None
+    def _ids(self, v_from, v_to, m_from, m_to) -> list[int]:
+        return list(range((v_from or 0) + 1, v_to + 1))
 
-    def _full_resync(self, v_to: int, epoch_ids: list[int],
-                     reason: str) -> dict[str, Any]:
-        """Rebuild the mirror AS the source's current state via
-        ``replace_all`` — never a merge. A merge's monotone-order
-        arbitration cannot express what a resync must: a source
-        fix-and-replay may re-issue a key under the SAME order value with
-        different content (latest-wins would keep the stale replica row),
-        and a key the source purged entirely must simply vanish (a
-        fabricated higher-order tombstone would out-arbitrate the key's
-        legitimate reappearance). Replacement has neither problem, and the
-        mirror-space applied set resets to exactly the synced range."""
-        cur = self._stamp_provenance(
-            self.src.read(v_to, include_deleted=True), v_to
+    def _rebuild(self, version, ids, reason):
+        """Rebuild the mirror AS the source's state at ``version`` via
+        ``replace_all``; the mirror-space applied set resets to ``ids``."""
+        rows = self.src.read(version, include_deleted=True)
+        return self.dst.replace_all(
+            self._stamp_provenance(rows, version), ids,
+            epoch_space=MIRROR_SPACE,
+            extra_summary={"mirror_of": str(self.src.root),
+                           "mirror_src_version": version, "full_resync": reason},
         )
-        out = self.dst.replace_all(
-            cur, epoch_ids, epoch_space=MIRROR_SPACE,
-            extra_summary={
-                "mirror_of": str(self.src.root),
-                "mirror_src_version": v_to,
-                "full_resync": reason,
-            },
+
+    def _merge(self, feed, ids, version):
+        return self.dst.merge_epochs(
+            self._stamp_provenance(feed, version), ids,
+            epoch_space=MIRROR_SPACE,
+            extra_summary={"mirror_of": str(self.src.root), "mirror_src_version": version},
         )
-        return {**out, "full_resync": reason}
 
-    # -- the one public verb ---------------------------------------------
-
-    def _check_source_identity(self) -> None:
+    def sync(self, version: int | None = None) -> dict[str, Any]:
         """A replica permanently records which source it mirrors
         (``mirror_of`` in every sync commit's summary); syncing it from a
         DIFFERENT source must fail loudly — depending on the two tables'
         version numbers it would otherwise either wedge as a forever
         ``up_to_date`` or latest-wins-contaminate the replica with foreign
-        rows, both silent."""
-        if not self.dst.exists():
-            return
-        for v in reversed(self.dst.versions()):
-            try:
-                s = (self.dst.manifest(v) or {}).get("summary") or {}
-            except FileNotFoundError:
-                continue
-            rec = s.get("mirror_of")
-            if rec is None:
-                continue
-            if rec != str(self.src.root):
-                raise ValueError(
-                    f"table {self.dst.root} mirrors {rec!r}, not "
-                    f"{str(self.src.root)!r}; refusing to cross-sync"
-                )
-            return
+        rows, both silent. A table with history but no mirror-space offset
+        is not a mirror at all: bootstrapping would replace its contents
+        (a ``--dst`` typo against a live table), so that is refused too."""
+        if self.dst.exists() and self.offset() is None:
+            raise ValueError(
+                f"table {self.dst.root} already has versions and is not a "
+                "mirror; refusing to bootstrap over it — point the mirror "
+                "at an empty root"
+            )
+        rec = offset_summary(self.dst, "mirror_of").get("mirror_of")
+        if rec is not None and rec != str(self.src.root):
+            raise ValueError(
+                f"table {self.dst.root} mirrors {rec!r}, not "
+                f"{str(self.src.root)!r}; refusing to cross-sync"
+            )
+        return super().sync(version)
 
     def _stamp_provenance(self, rows, v_to: int):
         """Re-stamp the ``epoch`` provenance column (when the source has
@@ -165,35 +128,6 @@ class Mirror:
             return rows
         dtype = dict(rows.dtypes)["epoch"]
         return rows.withColumn("epoch", F.lit(int(v_to)).cast(dtype))
-
-    def sync(self) -> dict[str, Any]:
-        """One replication round: apply everything the source committed
-        since the last sync. Idempotent; safe to run on any schedule."""
-        self._check_source_identity()
-        v_to = self.src.current_version()
-        if v_to is None:
-            return {"skipped": True, "reason": "source_empty"}
-        v_from = self.synced_version()
-        if v_from is not None and v_from >= v_to:
-            return {"skipped": True, "reason": "up_to_date",
-                    "synced_version": v_from}
-        epoch_ids = list(range((v_from or 0) + 1, v_to + 1))
-        if v_from is None:
-            return self._full_resync(v_to, epoch_ids, "bootstrap")
-        reason = self._needs_resync(v_from, v_to)
-        if reason is not None:
-            return self._full_resync(v_to, epoch_ids, reason)
-        feed = self._stamp_provenance(
-            self.src.changes_between(v_from, v_to), v_to
-        )
-        out = self.dst.merge_epochs(
-            feed, epoch_ids, epoch_space=MIRROR_SPACE,
-            extra_summary={
-                "mirror_of": str(self.src.root),
-                "mirror_src_version": v_to,
-            },
-        )
-        return {**out, "synced_from": v_from, "synced_to": v_to}
 
     def verify(self) -> dict[str, Any]:
         """Cheap divergence probe: row counts + per-column commit watermark

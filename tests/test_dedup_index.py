@@ -68,8 +68,11 @@ def test_maintenance_replay_is_idempotent(spark, tmpdir_path):
         [("r1", "a.py", 1, BASE), ("r1", "b.py", 2, BASE + " x")], SCHEMA), [0])
     first = idx.update_for_commit(c0)
     assert not first["bands"].get("skipped")
+    v_bands, v_sigs = idx.bands.current_version(), idx.sigs.current_version()
     again = idx.update_for_commit(c0)
-    assert again["bands"].get("skipped") and again["sigs"].get("skipped")
+    assert again.get("skipped")  # the offset is already past c0
+    assert idx.bands.current_version() == v_bands
+    assert idx.sigs.current_version() == v_sigs
     assert _inc_pairs(idx) == _batch_pairs(fact)
 
 
@@ -119,7 +122,7 @@ def test_refresh_full_equals_incremental(spark, tmpdir_path):
     ], SCHEMA), [0])
     c1 = fact.merge_epochs(spark.createDataFrame(
         [("r3", "d.py", 3, BASE + " v3")], SCHEMA), [1])
-    idx.refresh_full(100)  # catches up epochs 0+1 in one shot
+    idx.refresh_full()  # catches up epochs 0+1 in one shot
     assert _inc_pairs(idx) == _batch_pairs(fact)
     # incremental continues from the refreshed state: delete b
     c2 = fact.merge_epochs(spark.createDataFrame(
@@ -128,7 +131,7 @@ def test_refresh_full_equals_incremental(spark, tmpdir_path):
     idx.update_for_commit(c2)
     assert _inc_pairs(idx) == _batch_pairs(fact)
     # a second refresh on the SAME state is a no-op for the visible pairs
-    idx.refresh_full(101)
+    idx.refresh_full()
     assert _inc_pairs(idx) == _batch_pairs(fact)
     assert idx.bands.fsck()["ok"] and idx.sigs.fsck()["ok"]
 
@@ -270,8 +273,8 @@ def test_attach_rejects_foreign_layout(spark, tmpdir_path):
 
 def test_catch_up_heals_out_of_order_miss(spark, tmpdir_path):
     # commit N's update crashed but commit N+1's update ran (direct-API
-    # interleaving): the provenance watermark has moved PAST the gap, so
-    # gap detection must run on epoch sets, not the watermark
+    # interleaving): N+1's sync starts from the index's offset, so its
+    # window spans BOTH commits and the miss is healed on the way
     fact, idx = _mk(spark, tmpdir_path)
     c0 = fact.merge_epochs(spark.createDataFrame(
         [("r1", "a.py", 1, BASE + " v1")], SCHEMA), [0])
@@ -280,11 +283,46 @@ def test_catch_up_heals_out_of_order_miss(spark, tmpdir_path):
         [("r1", "b.py", 2, BASE + " v2")], SCHEMA), [1])
     c2 = fact.merge_epochs(spark.createDataFrame(     # epoch 2: applied
         [("r2", "c.py", 3, BASE + " v3")], SCHEMA), [2])
-    idx.update_for_commit(c2)
-    assert _inc_pairs(idx) != _batch_pairs(fact)  # b.py unindexed
-    out = idx.catch_up()
-    assert out is not None
+    out = idx.update_for_commit(c2)
+    assert out["synced_from"] == c0["version"]
     assert _inc_pairs(idx) == _batch_pairs(fact)
+    assert idx.bands.applied_epochs() == fact.applied_epochs()
+    assert idx.catch_up() is None
+
+
+def test_interrupted_round_is_finished_before_syncing_on(spark, tmpdir_path):
+    # a crash between the band merge and the sig merge of one round leaves
+    # the bands table a round ahead; a later change to the SAME doc must
+    # not strand the interrupted round's band rows in the index
+    import pytest
+
+    fact, idx = _mk(spark, tmpdir_path)
+    c0 = fact.merge_epochs(spark.createDataFrame([
+        ("r1", "a.py", 1, BASE + " v1"),
+        ("r1", "b.py", 2, "completely different words entirely here"),
+    ], SCHEMA), [0])
+    idx.update_for_commit(c0)
+    c1 = fact.merge_epochs(spark.createDataFrame(     # b joins a's family
+        [("r1", "b.py", 3, BASE + " v2")], SCHEMA), [1])
+    merge_sigs, crashed = idx.sigs.merge_epochs, []
+
+    def crash_once(*a, **kw):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("crash between the two merges")
+        return merge_sigs(*a, **kw)
+
+    idx.sigs.merge_epochs = crash_once
+    with pytest.raises(RuntimeError, match="between the two merges"):
+        idx.update_for_commit(c1)
+    assert idx.bands.applied_epochs() == {0, 1}
+    assert idx.sigs.applied_epochs() == {0}
+    c2 = fact.merge_epochs(spark.createDataFrame(     # and leaves it again
+        [("r1", "b.py", 4, "now something else entirely unrelated")],
+        SCHEMA), [2])
+    idx.update_for_commit(c2)
+    assert _inc_pairs(idx) == _batch_pairs(fact) == []
+    assert idx.sigs.applied_epochs() == idx.bands.applied_epochs()
     assert idx.catch_up() is None
 
 

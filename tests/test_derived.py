@@ -32,7 +32,7 @@ def test_incremental_rollup_equals_full(spark, stream, tmpdir_path):
         assert not out.get("skipped")
     # independent full recompute into a fresh rollup table
     full = RepoRollup(spark, pipe.table, f"{tmpdir_path}/rollup_full", n_buckets=4)
-    full.refresh_full(999)
+    full.refresh_full()
     assert _canon(roll.read()) == _canon(full.read())
     n_repos = pipe.table.read().select("repo").distinct().count()
     assert roll.read().count() == n_repos
@@ -62,100 +62,6 @@ def test_rollup_values(spark, stream, tmpdir_path):
     assert one["last_commit"] == rows.agg({"commit": "max"}).collect()[0][0]
 
 
-def test_line_index_incremental(spark, stream, tmpdir_path):
-    """Line index: EXCEPT-based discovery indexes each version once; re-update
-    is a no-op; content reconstructs exactly."""
-    from pyspark.sql import functions as F
-
-    from etl_spark.derived import LineIndex
-
-    pipe = IngestPipeline(spark, f"{tmpdir_path}/t4", n_buckets=8)
-    pipe.replay(stream, max_epoch=1)
-    idx = LineIndex(spark, pipe.table, f"{tmpdir_path}/lines", n_buckets=8)
-    idx.update(epoch_ids=[0, 1])
-    n1 = idx.read().count()
-    assert n1 > 0
-    assert idx.pending_versions().count() == 0  # everything indexed
-
-    # next fact epoch: only NEW versions get indexed
-    pipe.replay(stream)
-    pend = idx.pending_versions().count()
-    assert pend > 0
-    idx.update(epoch_ids=[2])
-    assert idx.pending_versions().count() == 0
-    # idempotent
-    out = idx.update(epoch_ids=[2])
-    assert out.get("skipped")
-
-    # reconstruction: concat lines per version == stored content
-    recon = (
-        idx.read()
-        .groupBy("repo", "path", "commit")
-        .agg(F.concat_ws("\n", F.array_sort(F.collect_list(
-            F.struct("line_no", "line"))).getField("line")).alias("recon"))
-    )
-    joined = recon.join(pipe.table.read(), ["repo", "path", "commit"])
-    bad = joined.where(F.col("recon") != F.col("content")).count()
-    assert bad == 0
-
-
-def test_line_index_discovery_is_o_delta_not_o_index(spark, stream, tmpdir_path):
-    """VERDICT r2 #2: steady-state discovery must come from the source's
-    change feed past the synced watermark — never a scan of the line-grained
-    index. Asserted by poisoning the index's read(): discovery still works."""
-    from etl_spark.derived import LineIndex
-
-    pipe = IngestPipeline(spark, f"{tmpdir_path}/t5", n_buckets=8)
-    pipe.replay(stream, max_epoch=1)
-    idx = LineIndex(spark, pipe.table, f"{tmpdir_path}/lines5", n_buckets=8)
-    idx.update(epoch_ids=[0, 1])
-    assert idx.synced_to_version() == pipe.table.current_version()
-    pipe.replay(stream)
-
-    # poison: any full-index read during steady-state discovery blows up
-    def boom(*a, **kw):
-        raise AssertionError("discovery scanned the full line index")
-
-    orig = idx.table.read
-    idx.table.read = boom
-    try:
-        pend = idx.pending_versions()
-        n = pend.count()
-    finally:
-        idx.table.read = orig
-    assert n > 0
-    # differential: watermark discovery == the J4 EXCEPT scan
-    a = sorted((r.repo, r.path, r.commit) for r in pend.collect())
-    b = sorted(
-        (r.repo, r.path, r.commit)
-        for r in idx.pending_versions_scan().collect()
-    )
-    assert a == b
-    # applying it yields the same final index as the scan-based path used
-    # to produce (and the watermark advances)
-    idx.update(epoch_ids=[2, 3])
-    assert idx.synced_to_version() == pipe.table.current_version()
-    assert idx.pending_versions().count() == 0
-    assert idx.pending_versions_scan().count() == 0
-
-
-def test_line_index_watermark_expiry_falls_back_to_scan(spark, stream, tmpdir_path):
-    """If the watermarked source snapshot was expired, discovery repairs via
-    the EXCEPT scan instead of failing."""
-    from etl_spark.derived import LineIndex
-
-    pipe = IngestPipeline(spark, f"{tmpdir_path}/t6", n_buckets=8)
-    pipe.replay(stream, max_epoch=1)
-    idx = LineIndex(spark, pipe.table, f"{tmpdir_path}/lines6", n_buckets=8)
-    idx.update(epoch_ids=[0, 1])
-    pipe.replay(stream)
-    pipe.table.expire_snapshots(retain_last=1)  # watermark snapshot gone
-    pend = idx.pending_versions()
-    assert pend.count() > 0
-    idx.update(epoch_ids=[2, 3])
-    assert idx.pending_versions().count() == 0
-
-
 def test_refresh_full_tombstones_fully_deleted_repos(spark, tmpdir_path):
     """Repair path parity under deletes: a repo whose EVERY fact row was
     tombstoned must disappear from refresh_full's result exactly as the
@@ -173,7 +79,7 @@ def test_refresh_full_tombstones_fully_deleted_repos(spark, tmpdir_path):
     )
     t.merge_epoch(df, 0)
     roll = RepoRollup(spark, t, f"{tmpdir_path}/roll", n_buckets=4)
-    roll.refresh_full(100)
+    roll.refresh_full()
     assert {r.repo for r in roll.read().collect()} == {"r1", "r2"}
     # tombstone r1's only row, then REPAIR (not incremental maintenance)
     t.delete_epochs(
@@ -181,7 +87,7 @@ def test_refresh_full_tombstones_fully_deleted_repos(spark, tmpdir_path):
                               "repo string, path string, commit string"),
         [1],
     )
-    roll.refresh_full(101)
+    roll.refresh_full()
     assert {r.repo for r in roll.read().collect()} == {"r2"}
 
 
@@ -213,7 +119,7 @@ def test_clean_corpus_incremental_equals_full(spark, stream, tmpdir_path):
         out = cc.update_for_commit(st.commit)
         assert not out.get("skipped")
     full = CleanCorpus(spark, pipe.table, f"{tmpdir_path}/cc_full", n_buckets=4)
-    full.refresh_full(999)
+    full.refresh_full()
     assert _canon(cc.read()) == _canon(full.read())
     # the repetition gate actually discriminates on this corpus
     n_clean = cc.read().count()
@@ -234,7 +140,7 @@ def test_clean_corpus_handles_deletes(spark, tmpdir_path):
     for st in pipe.replay(root):
         cc.update_for_commit(st.commit)
     full = CleanCorpus(spark, pipe.table, f"{tmpdir_path}/cc_del_full", n_buckets=4)
-    full.refresh_full(999)
+    full.refresh_full()
     assert _canon(cc.read()) == _canon(full.read())
     # no clean row may survive for a key deleted in the fact table
     fact_keys = {(r["repo"], r["path"]) for r in
@@ -344,7 +250,7 @@ def test_derived_catch_up_heals_missed_commit(spark, stream, tmpdir_path):
         assert out is not None and not out.get("skipped")
         full = type(maint)(spark, pipe.table,
                            f"{tmpdir_path}/{fresh_root}", n_buckets=4)
-        full.refresh_full(999)
+        full.refresh_full()
         assert _canon(maint.read()) == _canon(full.read())
         assert maint.catch_up() is None  # synced: manifest reads only
 
@@ -358,14 +264,14 @@ def test_pipeline_replay_heals_derived_gap(spark, stream, tmpdir_path):
                         maintain_rollup=True)
     p1.replay(stream)
     full = RepoRollup(spark, p1.table, f"{tmpdir_path}/ph_rf", n_buckets=4)
-    full.refresh_full(999)
+    full.refresh_full()
     assert _canon(p1.rollup.read()) == _canon(full.read())
 
 
 def test_derived_status_report(spark, stream, tmpdir_path):
     """cli status's `derived` section: synced in steady state, flags the
-    epoch gap a crashed (or bypassed) maintainer leaves, clears after
-    catch_up — manifest reads only."""
+    epoch gap a crashed (or bypassed) maintainer leaves and the resync a
+    fact rollback needs, clears after catch_up — manifest reads only."""
     from etl_spark.cli import _derived_status
 
     pipe = IngestPipeline(spark, f"{tmpdir_path}/st_t", n_buckets=8,
@@ -373,6 +279,7 @@ def test_derived_status_report(spark, stream, tmpdir_path):
     pipe.replay(stream)
     st = _derived_status(spark, pipe.table)
     assert st["rollup"]["synced"] and st["rollup"]["missing_epochs"] == 0
+    v_before = pipe.table.current_version()
     pipe.table.merge_epochs(spark.createDataFrame(
         [("rX", "pX", "c999999999999", "zz", 99)],
         "repo string, path string, commit string, content string, epoch int",
@@ -380,5 +287,19 @@ def test_derived_status_report(spark, stream, tmpdir_path):
     st = _derived_status(spark, pipe.table)
     assert not st["rollup"]["synced"]
     assert st["rollup"]["missing_epochs"] == 1
+    assert st["rollup"]["lag_versions"] >= 1
     pipe.rollup.catch_up()
-    assert _derived_status(spark, pipe.table)["rollup"]["synced"]
+    st = _derived_status(spark, pipe.table)["rollup"]
+    assert st["synced"] and st["lag_versions"] == 0
+    # rollback past epoch 99: nothing is missing, but the rollup still
+    # reflects the rolled-back row until it resyncs
+    pipe.table.rollback(v_before)
+    st = _derived_status(spark, pipe.table)["rollup"]
+    assert not st["synced"] and st["missing_epochs"] == 0
+    assert st["resync"] == "applied_set_shrank" and st["lag_versions"] == 1
+    assert pipe.rollup.catch_up()["full_resync"] == "applied_set_shrank"
+    st = _derived_status(spark, pipe.table)["rollup"]
+    assert st["synced"] and st["lag_versions"] == 0
+    full = RepoRollup(spark, pipe.table, f"{tmpdir_path}/st_rf", n_buckets=4)
+    full.refresh_full()
+    assert _canon(pipe.rollup.read()) == _canon(full.read())

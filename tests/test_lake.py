@@ -546,3 +546,29 @@ def test_replace_all_overwrites_state(spark, tmpdir_path):
     assert {r.content for r in t.read().collect()} == {"v3"}
     # the pre-replace snapshot is still time-travel readable
     assert {r.content for r in t.read(version=1).collect()} == {"v5", "w5"}
+
+
+def test_fsck_exempts_only_the_space_replace_all_resets(spark, tmpdir_path):
+    """replace_all may shrink the id space it replaces; a shrink of any
+    OTHER space at the same commit is still an fsck finding."""
+    import json
+
+    t = _tbl(spark, tmpdir_path)
+    t.merge_epoch(_df(spark, [("r", "a", "c000000000001", "v1")]), 0)
+    t.merge_epoch(_df(spark, [("r", "a", "c000000000002", "v2")]), 1)
+    t.replace_all(_df(spark, [("r", "a", "c000000000002", "v2")]), [7],
+                  epoch_space="mirror")
+    t.replace_all(_df(spark, [("r", "a", "c000000000002", "v2")]), [3],
+                  epoch_space="mirror")
+    assert t.fsck()["ok"], t.fsck()["findings"]
+    v = t.replace_all(_df(spark, [("r", "a", "c000000000002", "v2")]), [4],
+                      epoch_space="mirror")["version"]
+    path = f"{tmpdir_path}/_meta/v{v:012d}.json"
+    with open(path) as fh:
+        m = json.load(fh)
+    m["applied_epochs"] = m["applied_epochs_mirror"]  # drop batch 0 and 1
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    findings = t.fsck()["findings"]
+    assert any(f.startswith(f"applied_epochs set shrank at v{v}")
+               for f in findings), findings

@@ -239,3 +239,17 @@ def test_mirror_cli(spark, tmpdir_path):
                      "--dst", f"{tmpdir_path}/d2"]) == 1
     d = SnapshotTable(spark, f"{tmpdir_path}/dst")
     assert d.read().count() == 1
+
+
+def test_bootstrap_refuses_existing_non_mirror(spark, tmpdir_path):
+    """A first sync into a table that already has history but was never a
+    mirror (a --dst typo against a live table) must refuse instead of
+    replacing that table's contents with the source's."""
+    src = _tbl(spark, f"{tmpdir_path}/src")
+    src.merge_epoch(_df(spark, [("r", "a", "c000000000001", "src")]), 0)
+    live = _tbl(spark, f"{tmpdir_path}/live")
+    live.merge_epoch(_df(spark, [("q", "z", "c000000000009", "keep")]), 0)
+    with pytest.raises(ValueError, match="not a mirror"):
+        Mirror(spark, src, f"{tmpdir_path}/live").sync()
+    assert live.current_version() == 1
+    assert _state(live) == [("q", "z", "c000000000009", "keep")]
